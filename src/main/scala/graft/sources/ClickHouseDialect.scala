@@ -7,7 +7,7 @@ import org.apache.spark.sql.jdbc.{JdbcDialect, JdbcDialects, JdbcType}
 import org.apache.spark.sql.types._
 
 /** JDBC dialect for ClickHouse — makes the engine's JDBC tier
-  * ([[graft.streaming.JdbcBatchSink]] / [[graft.streaming.StagedJdbcBatchSink]])
+  * ([[graft.streaming.StagedJdbcBatchSink]])
   * DROP-IN against the reference's actual warehouse instead of merely
   * pattern-equivalent. The reference talks to ClickHouse over its native
   * protocol (`connect.go:46` `clickhouse.ParseDSN`); Spark's JDBC writer

@@ -51,22 +51,22 @@ final class AsyncIngest[T: Encoder](sqlContext: SQLContext,
   /** Rows enqueued but not yet consumed (gauge; exact between calls). */
   def inFlight: Int = bufferCap - permits.availablePermits()
 
-  /** Release backpressure permits for `n` consumed rows. Called by the
-    * [[bindTo]] listener; exposed for custom wiring (e.g. foreachBatch
-    * sinks that want to release only after a durable write). */
-  def onConsumed(n: Long): Unit =
-    if (n > 0) permits.release(math.min(n, Int.MaxValue.toLong).toInt)
-
   /** Wire backpressure to the query draining this source: each
-    * completed micro-batch releases its `numInputRows`. Returns the
-    * listener so callers can remove it after `query` stops. */
+    * completed micro-batch releases one permit per row it read
+    * (`numInputRows`). That count equals the rows enqueued only while
+    * the query reads each batch once, which [[BatchSink]] requires.
+    * Returns the listener so callers can remove it after `query`
+    * stops. */
   def bindTo(query: StreamingQuery): StreamingQueryListener = {
     val listener = new StreamingQueryListener {
       override def onQueryStarted(
           e: StreamingQueryListener.QueryStartedEvent): Unit = ()
       override def onQueryProgress(
-          e: StreamingQueryListener.QueryProgressEvent): Unit =
-        if (e.progress.id == query.id) onConsumed(e.progress.numInputRows)
+          e: StreamingQueryListener.QueryProgressEvent): Unit = {
+        val n = e.progress.numInputRows
+        if (e.progress.id == query.id && n > 0)
+          permits.release(math.min(n, Int.MaxValue.toLong).toInt)
+      }
       override def onQueryTerminated(
           e: StreamingQueryListener.QueryTerminatedEvent): Unit = ()
     }

@@ -11,7 +11,8 @@ import scala.concurrent.duration._
   *   - producers enqueue rows asynchronously; a worker accumulates them
   *     and flushes when a timer ticks OR the batch hits a size cap
   *     (reference `hashes.go:33-66`, cap at `hashes.go:68`)
-  *   - an `enabled=false` config drops rows silently (`hashes.go:12-15`)
+  *   - `enabled = false` drops rows silently at enqueue
+  *     (`hashes.go:12-15`; [[AsyncIngest]])
   *   - flush is idempotent-intended (`isSent`, `hashes.go:79-83`) — the
   *     reference's check-then-act race and its fire-and-forget error
   *     handling made that at-most-once; here the foreachBatch batchId +
@@ -50,11 +51,16 @@ import scala.concurrent.duration._
 final case class BatcherConfig(
     interval: FiniteDuration = 1.second,     // tick trigger  (hashes.go:45)
     maxBatchCap: Int = 10000,                // size cap      (hashes.go:68)
-    bufferCap: Int = 10000,                  // channel cap   (connect.go:11)
-    enabled: Boolean = true)                 // kill switch   (hashes.go:12-15)
+    bufferCap: Int = 10000)                  // channel cap   (connect.go:11)
 
 /** Where a flushed micro-batch goes. Implementations must be idempotent
-  * per batchId: Structured Streaming re-runs a batch after failure. */
+  * per batchId: Structured Streaming re-runs a batch after failure.
+  *
+  * `write` reads `df` once. Every further action on it reads the source
+  * again, and the query's `numInputRows` counts those rows too; that
+  * figure is what [[AsyncIngest.bindTo]] releases as backpressure
+  * permits. `write` may also receive an empty batch (a watermarked input
+  * runs no-data micro-batches) and must leave the target unchanged. */
 trait BatchSink extends Serializable {
   def write(df: DataFrame, batchId: Long, maxBatchCap: Int): Unit
 }
@@ -72,22 +78,6 @@ class ParquetBatchSink(dir: String) extends BatchSink {
 object ParquetBatchSink {
   def readAll(spark: SparkSession, dir: String): DataFrame =
     spark.read.option("basePath", dir).parquet(dir)
-}
-
-/** The ClickHouse-shaped path (reference `hashes.go:86-98`: prepared
-  * batch INSERT over the native protocol): Spark's JDBC writer with
-  * `batchsize` = maxBatchCap reproduces "one prepared statement, ≤cap
-  * rows per round trip" per partition. Proven against embedded Derby
-  * (JdbcBatcherSpec). Plain JDBC append is at-least-once on replay —
-  * for effectively-once against a real warehouse use
-  * [[StagedJdbcBatchSink]] (stage + MERGE), or rely on a
-  * ReplacingMergeTree-style dedup key downstream. */
-final class JdbcBatchSink(url: String, table: String,
-    properties: java.util.Properties) extends BatchSink {
-  override def write(df: DataFrame, batchId: Long, maxBatchCap: Int): Unit =
-    df.write.mode("append")
-      .option("batchsize", maxBatchCap.toLong)
-      .jdbc(url, table, properties)
 }
 
 /** Warehouse-specific SQL for the stage→target step of
@@ -181,24 +171,26 @@ case object ClickHouseMergeIdiom extends MergeIdiom {
   }
 }
 
-/** Effectively-once JDBC delivery via stage-and-MERGE — the production
-  * warehouse shape the plain [[JdbcBatchSink]] Scaladoc points at.
+/** The ClickHouse-shaped path (reference `hashes.go:86-98`: prepared
+  * batch INSERT over the native protocol), made effectively-once via
+  * stage-and-MERGE. Proven against embedded Derby (JdbcBatcherSpec).
   * Each micro-batch is (re)staged into `<table>_stage` tagged with its
   * batchId, MERGEd into the target (insert only rows whose key is
   * absent), then GC'd from the stage. Replay after a crash at ANY point
   * is safe:
   *   - crash after staging: the replay's stage-clean removes the
   *     half-staged rows before restaging
-  *   - crash after MERGE but before GC or offset commit (the
-  *     duplication window of plain append): re-MERGE inserts nothing —
-  *     every staged key already matches the target
+  *   - crash after MERGE but before GC or offset commit (the window in
+  *     which a plain JDBC append would duplicate the batch): re-MERGE
+  *     inserts nothing — every staged key already matches the target
   *
   * `keyCols` is the warehouse dedup key (the reference's tables are
   * keyed by sha256sum the same way); within-batch duplicates collapse
   * before staging so the MERGE's insert set is key-unique. The stage
-  * write itself uses the prepared-batch path (`batchsize` = cap), so
-  * round-trip bounds match [[JdbcBatchSink]]; the MERGE is one
-  * set-based statement on the server, not per-row traffic. */
+  * write itself uses Spark's prepared-batch JDBC path (`batchsize` =
+  * cap), so each round trip carries ≤ cap rows, as in the reference;
+  * the MERGE is one set-based statement on the server, not per-row
+  * traffic. */
 class StagedJdbcBatchSink(url: String, table: String,
     keyCols: Seq[String], properties: java.util.Properties) extends BatchSink {
   require(keyCols.nonEmpty, "effectively-once needs a dedup key")
@@ -238,10 +230,10 @@ class StagedJdbcBatchSink(url: String, table: String,
   * `ProcessHashes` (`connect.go:75-79`) ≈ [[start]]. */
 final class MicroBatcher(config: BatcherConfig, sink: BatchSink) extends Serializable {
 
-  /** Start the accumulate-and-flush loop. `enabled=false` makes every
-    * flush a silent no-op (the reference drops at enqueue; dropping at
-    * flush is equivalent observable behavior with less custom source
-    * code — rows never reach the sink). */
+  /** Start the accumulate-and-flush loop. Each micro-batch is one
+    * [[BatchSink.write]]. The reference's `enabled=false` gate
+    * (`hashes.go:12-15`) lives at enqueue, in [[AsyncIngest]]: rows it
+    * drops never reach the stream, so no flush sees them. */
   def start[T](ds: Dataset[T], checkpointDir: String): StreamingQuery =
     startWith(ds, checkpointDir, Trigger.ProcessingTime(config.interval.toMillis))
 
@@ -257,9 +249,7 @@ final class MicroBatcher(config: BatcherConfig, sink: BatchSink) extends Seriali
       .trigger(trigger)
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (df: DataFrame, batchId: Long) =>
-        if (config.enabled && !df.isEmpty) {
-          sink.write(df, batchId, config.maxBatchCap)
-        }
+        sink.write(df, batchId, config.maxBatchCap)
       }
       .start()
 }

@@ -73,6 +73,10 @@ class BatcherPropertySpec extends AnyFunSuite {
     producer.join(60000)
     assert(!producer.isAlive, "producer must finish once the query drains the buffer")
     q.processAllAvailable()
+    // every consumed row released exactly one permit: nothing in flight,
+    // nothing over-released (a second read of a batch would count twice)
+    org.apache.spark.ListenerBusDrain(spark.sparkContext)
+    assert(ingest.inFlight === 0)
     q.stop()
     assert(maxSeen <= cap, s"in-flight rows peaked at $maxSeen > cap $cap")
     assert(ParquetBatchSink.readAll(spark, outDir).count() === total.toLong)

@@ -1,11 +1,15 @@
 package graft
 
 import java.nio.file.Files
+import java.util.concurrent.ConcurrentHashMap
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.streaming._
 import scala.concurrent.duration._
+import scala.jdk.CollectionConverters._
 import scala.util.Random
 
 /** Batcher correctness, mirroring the reference's test strategy
@@ -22,12 +26,29 @@ class BatcherSpec extends AnyFunSuite {
   lazy val spark: SparkSession = Sessions.base("local[4]", 4)
   private def tmp(prefix: String) = Files.createTempDirectory(prefix).toString
 
+  /** Spark jobs per micro-batch, keyed by the query and batch ids the
+    * stream sets as job properties on every job a batch submits. */
+  private final class BatchJobs extends SparkListener {
+    private val counts = new ConcurrentHashMap[(String, String), Int]()
+    override def onJobStart(e: SparkListenerJobStart): Unit =
+      for {
+        p <- Option(e.properties)
+        q <- Option(p.getProperty("sql.streaming.queryId"))
+        b <- Option(p.getProperty("streaming.sql.batchId"))
+      } counts.merge((q, b), 1, _ + _)
+    def of(q: StreamingQuery): Map[String, Int] = counts.asScala.collect {
+      case ((id, b), n) if id == q.id.toString => b -> n
+    }.toMap
+  }
+
   private def runConservation(rows: Int, interval: FiniteDuration, cap: Int,
       chunkSize: Int): Long = {
     import spark.implicits._
     val outDir = tmp("cons_out")
     val ingest = new AsyncIngest[LimitHash](spark.sqlContext)
     val batcher = new MicroBatcher(BatcherConfig(interval, cap), new ParquetBatchSink(outDir))
+    val jobs = new BatchJobs
+    spark.sparkContext.addSparkListener(jobs)
     val q = batcher.start(ingest.toDS(), tmp("cons_ck"))
     val rnd = new Random(42)
     (0 until rows).map { i =>
@@ -38,6 +59,12 @@ class BatcherSpec extends AnyFunSuite {
     }
     q.processAllAvailable()
     q.stop()
+    org.apache.spark.ListenerBusDrain(spark.sparkContext)
+    spark.sparkContext.removeSparkListener(jobs)
+    // the flush reads each micro-batch once: the sink's write is its only job
+    val perBatch = jobs.of(q)
+    assert(perBatch.nonEmpty && perBatch.values.forall(_ == 1),
+      s"jobs per micro-batch: $perBatch")
     ParquetBatchSink.readAll(spark, outDir).count()
   }
 

@@ -31,7 +31,7 @@ class JdbcBatcherSpec extends AnyFunSuite {
     val ingest = new AsyncIngest[LimitHash](spark.sqlContext)
     val batcher = new MicroBatcher(
       BatcherConfig(interval = 50.millis, maxBatchCap = 1000),
-      new JdbcBatchSink(url, "limits_hashes", props))
+      new StagedJdbcBatchSink(url, "limits_hashes", Seq("sha256sum"), props))
     val q = batcher.start(ingest.toDS(),
       Files.createTempDirectory("jdbc_ck").toString)
     val rows = (0 until 5000).map(i =>
@@ -75,7 +75,7 @@ class JdbcBatcherSpec extends AnyFunSuite {
     val ckDir = Files.createTempDirectory("staged_ck").toString
     // fail AFTER the durable write: the offset is not committed, so the
     // restart replays a batch whose rows are already in the warehouse —
-    // the exact window where JdbcBatchSink (plain append) would double
+    // the exact window where a plain JDBC append would double
     val failAfter = new StagedJdbcBatchSink(url3, "eo_hashes", Seq("sha256sum"), props) {
       override def write(d: org.apache.spark.sql.DataFrame, batchId: Long, cap: Int): Unit = {
         super.write(d, batchId, cap)
@@ -100,6 +100,27 @@ class JdbcBatcherSpec extends AnyFunSuite {
       .select("amount").as[Long].collect().sorted
     assert(got.length === 800, s"expected 800 rows, got ${got.length}")
     assert(got.toSeq === (0L until 800L))
+  }
+
+  test("sinks accept an empty micro-batch and leave the target unchanged") {
+    import spark.implicits._
+    // a watermarked input runs no-data micro-batches; they reach the
+    // sink as empty DataFrames
+    val rows = (0 until 50).map(i => LimitHash(s"u$i", i.toLong, null, f"hash_$i%05d")).toDF()
+    val empty = Seq.empty[LimitHash].toDF()
+
+    val dir = Files.createTempDirectory("empty_parquet").toString
+    val parquet = new ParquetBatchSink(dir)
+    parquet.write(rows, 0L, 100)
+    parquet.write(empty, 1L, 100)
+    assert(ParquetBatchSink.readAll(spark, dir).count() === 50L)
+
+    val url4 = "jdbc:derby:memory:graftdb_empty;create=true"
+    val staged = new StagedJdbcBatchSink(url4, "empty_hashes", Seq("sha256sum"), props)
+    staged.write(rows, 0L, 100)
+    staged.write(empty, 1L, 100)
+    assert(spark.read.jdbc(url4, "empty_hashes", props).count() === 50L)
+    assert(spark.read.jdbc(url4, "empty_hashes_stage", props).count() === 0L)
   }
 }
 
