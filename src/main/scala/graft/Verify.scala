@@ -31,6 +31,26 @@ object Verify {
       false
     }
 
+  /** JSON string escape: backslash, quote, and ALL control chars (<0x20)
+    * — a tab or CR in builder-authored SQL would otherwise make the
+    * oracle compare's json.load fail and silently zero the correctness check. */
+  def jsonString(s: String): String = "\"" + s.flatMap {
+    case '"'  => "\\\""
+    case '\\' => "\\\\"
+    case '\n' => "\\n"
+    case '\r' => "\\r"
+    case '\t' => "\\t"
+    case c if c < ' ' => f"\\u${c.toInt}%04x"
+    case c => c.toString
+  } + "\""
+
+  /** `oracle_sql.json`: the oracle SQL of every query whose name passes
+    * `keep`, so a filtered run compares only the queries it ran. */
+  def oracleJson(keep: String => Boolean): String =
+    SparkEntry.oracleSql.iterator.filter(kv => keep(kv._1))
+      .map { case (k, v) => s"${jsonString(k)}: ${jsonString(v)}" }
+      .mkString("{", ",", "}")
+
   def main(args: Array[String]): Unit = {
     val (sfDir, outDir) = (args(0), args(1))
     // optional 3rd arg (local use only): comma-separated name prefixes
@@ -47,21 +67,7 @@ object Verify {
     }
     if (errs.nonEmpty)
       System.err.println(s"[verify] ${errs.size} ERRORED: ${errs.sorted.mkString(",")}")
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), oracleJson(only))
     spark.stop()
   }
 }

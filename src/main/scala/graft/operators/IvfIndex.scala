@@ -687,7 +687,7 @@ object IvfIndex extends org.apache.spark.internal.Logging {
     * `cell` — and AQE's skew handling splits oversized cells at
     * runtime. Per-query work is Σ probed-cell sizes — O(nProbe·n/k) =
     * O(√n) rows under the [[adaptiveCellCount]] policy (soaked in
-    * tools/SoakAnn's joined leg).
+    * the `ann` leg of graft.tools.Soak).
     *
     * Unlike [[search]] there is no probed-cell partition pruning: a
     * table-scale query side touches every cell anyway, and deriving
@@ -1201,8 +1201,8 @@ object IvfIndex extends org.apache.spark.internal.Logging {
     * PQ codes genuinely collide across different vectors, and SQ8
     * scores tie on exact-duplicate vectors — so a row_number cut inside
     * a tie group would drop the true neighbor on an arbitrary id
-    * tie-break and no refine could recover it (SoakAnn's 100×-scale PQ
-    * leg caught exactly this). Admitting whole levels means the refine
+    * tie-break and no refine could recover it (the `ann` soak leg caught
+    * exactly this at 100× scale on the PQ layout). Admitting whole levels means the refine
     * pool is every candidate the coarse pass cannot separate from the
     * boundary; the degenerate worst case (one giant level = codes carry
     * no information) honestly degrades to an exact re-rank of the
@@ -1277,7 +1277,7 @@ object IvfIndex extends org.apache.spark.internal.Logging {
     * same-code candidates are never split arbitrarily. The default
     * refineFactor 4 matches [[searchQuantized]] for API symmetry;
     * recall-sensitive PQ serving should pass 16+ (FAISS's own posture —
-    * the refine stays cheap through the InSet ladder). SoakAnn's PQ leg
+    * the refine stays cheap through the InSet ladder). The `ann` soak leg
     * gates planted exactness at 100× scale under refineFactor 16. */
   def searchPq(spark: SparkSession, queries: DataFrame, fq: String,
       nProbe: Int, topK: Int, refineFactor: Int = 4,

@@ -327,7 +327,7 @@ object ParquetVersions {
 
   private[sources] def retryOnMaskConflict[A](
       attempts: Int = DefaultRetryAttempts)(body: => A): A = {
-    // sustained multi-writer churn (SoakConcurrent) legitimately needs
+    // sustained multi-writer churn (the `concurrent` soak leg) legitimately needs
     // a deeper budget than the 3 attempts interactive DML wants —
     // overridable without threading a parameter through every command.
     // The property only REPLACES the default: a caller that chose its
