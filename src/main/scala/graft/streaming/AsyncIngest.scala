@@ -19,6 +19,17 @@ import org.apache.spark.sql.streaming.{StreamingQuery, StreamingQueryListener}
   * production source (files/Kafka-shaped) the same bound is source
   * admission control — see [[MicroBatcher]] Scaladoc.
   *
+  * Split rule: every enqueue call appends one block to the stream, and
+  * [[toDS]] coalesces a micro-batch's blocks into at most
+  * `defaultParallelism` splits. The blocks carry no preferred locations,
+  * so Spark's default coalescer gives each split a run of neighbouring
+  * blocks (equal block counts, not rows), in enqueue order; a batch with
+  * no more blocks than cores reads one split per block. An enqueue call
+  * is therefore no longer a task or a parquet file of its own: a per-row
+  * producer's tick writes one file per split, not per call (the sink
+  * still cuts files at `maxBatchCap` rows), much as the reference's
+  * pooled batch is one INSERT per tick (`hashes.go:33-66`).
+  *
   * In-memory sources are a driver-side test harness by design; the
   * production ingest path is a real streaming source feeding the same
   * [[MicroBatcher]].
@@ -74,6 +85,8 @@ final class AsyncIngest[T: Encoder](sqlContext: SQLContext,
     listener
   }
 
-  /** The unbounded Dataset to hand to [[MicroBatcher.start]]. */
-  def toDS(): Dataset[T] = stream.toDS()
+  /** The unbounded Dataset to hand to [[MicroBatcher.start]], at most
+    * one split per core (see the split rule above). */
+  def toDS(): Dataset[T] =
+    stream.toDS().coalesce(sqlContext.sparkContext.defaultParallelism)
 }

@@ -190,7 +190,11 @@ case object ClickHouseMergeIdiom extends MergeIdiom {
   * write itself uses Spark's prepared-batch JDBC path (`batchsize` =
   * cap), so each round trip carries ≤ cap rows, as in the reference;
   * the MERGE is one set-based statement on the server, not per-row
-  * traffic. */
+  * traffic.
+  *
+  * The sink creates both tables (if missing) once, on its first write;
+  * they must not be dropped while it is in use (a new sink creates them
+  * again). */
 class StagedJdbcBatchSink(url: String, table: String,
     keyCols: Seq[String], properties: java.util.Properties) extends BatchSink {
   require(keyCols.nonEmpty, "effectively-once needs a dedup key")
@@ -198,15 +202,19 @@ class StagedJdbcBatchSink(url: String, table: String,
   // warehouse-matched SQL (Derby/ANSI: MERGE; ClickHouse: anti-join
   // INSERT) — see MergeIdiom; the step sequence is identical either way
   private val idiom = MergeIdiom.forUrl(url)
+  @volatile private var tablesCreated = false
 
   override def write(df: DataFrame, batchId: Long, maxBatchCap: Int): Unit = {
     val clean = df.dropDuplicates(keyCols)
     val cols = clean.schema.fieldNames.toSeq
-    // ensure both tables exist with the writer's own type mapping
-    // (append with 0 rows creates-if-missing, never truncates)
-    clean.limit(0).write.mode("append").jdbc(url, table, properties)
-    clean.limit(0).withColumn("batch_id", org.apache.spark.sql.functions.lit(batchId))
-      .write.mode("append").jdbc(url, stage, properties)
+    // once per sink: ensure both tables exist with the writer's own type
+    // mapping (append with 0 rows creates-if-missing, never truncates)
+    if (!tablesCreated) {
+      clean.limit(0).write.mode("append").jdbc(url, table, properties)
+      clean.limit(0).withColumn("batch_id", org.apache.spark.sql.functions.lit(batchId))
+        .write.mode("append").jdbc(url, stage, properties)
+      tablesCreated = true
+    }
     // replay-clean, restage, merge, GC — each step idempotent per batchId
     execute(idiom.deleteStaged(stage, batchId))
     clean.withColumn("batch_id", org.apache.spark.sql.functions.lit(batchId))

@@ -2,7 +2,7 @@ package graft
 
 import java.nio.file.Files
 import java.util.concurrent.ConcurrentHashMap
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageSubmitted}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.functions._
@@ -26,20 +26,39 @@ class BatcherSpec extends AnyFunSuite {
   lazy val spark: SparkSession = Sessions.base("local[4]", 4)
   private def tmp(prefix: String) = Files.createTempDirectory(prefix).toString
 
-  /** Spark jobs per micro-batch, keyed by the query and batch ids the
-    * stream sets as job properties on every job a batch submits. */
+  /** Spark jobs and tasks per micro-batch, keyed by the query and batch
+    * ids the stream sets as job properties on every job a batch submits. */
   private final class BatchJobs extends SparkListener {
     private val counts = new ConcurrentHashMap[(String, String), Int]()
+    private val taskCounts = new ConcurrentHashMap[(String, String), Int]()
+    private def batchOf(props: java.util.Properties) = for {
+      p <- Option(props)
+      q <- Option(p.getProperty("sql.streaming.queryId"))
+      b <- Option(p.getProperty("streaming.sql.batchId"))
+    } yield (q, b)
     override def onJobStart(e: SparkListenerJobStart): Unit =
-      for {
-        p <- Option(e.properties)
-        q <- Option(p.getProperty("sql.streaming.queryId"))
-        b <- Option(p.getProperty("streaming.sql.batchId"))
-      } counts.merge((q, b), 1, _ + _)
-    def of(q: StreamingQuery): Map[String, Int] = counts.asScala.collect {
+      batchOf(e.properties).foreach(counts.merge(_, 1, _ + _))
+    override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit =
+      batchOf(e.properties).foreach(taskCounts.merge(_, e.stageInfo.numTasks, _ + _))
+    private def forQuery(m: ConcurrentHashMap[(String, String), Int],
+        q: StreamingQuery): Map[String, Int] = m.asScala.collect {
       case ((id, b), n) if id == q.id.toString => b -> n
     }.toMap
+    def of(q: StreamingQuery): Map[String, Int] = forQuery(counts, q)
+    def tasksOf(q: StreamingQuery): Map[String, Int] = forQuery(taskCounts, q)
   }
+
+  /** The `amount` column of every parquet file under `dir`, each in the
+    * order the file stores its rows. */
+  private def amountsPerFile(dir: String): Seq[Seq[Long]] = {
+    import spark.implicits._
+    Files.list(java.nio.file.Paths.get(dir)).toArray.map(_.toString)
+      .filter(_.endsWith(".parquet")).toSeq
+      .map(f => spark.read.parquet(f).select("amount").as[Long].collect().toSeq)
+  }
+
+  private def perRowRows(n: Int) =
+    (0 until n).map(i => LimitHash(s"u$i", i.toLong, null, s"h$i"))
 
   private def runConservation(rows: Int, interval: FiniteDuration, cap: Int,
       chunkSize: Int): Long = {
@@ -89,20 +108,26 @@ class BatcherSpec extends AnyFunSuite {
 
   test("size cap bounds every written file (the semantic the reference's maxBatchCap protects)") {
     import spark.implicits._
-    val outDir = tmp("cap_out")
     val cap = 100
-    val ingest = new AsyncIngest[LimitHash](spark.sqlContext)
-    val batcher = new MicroBatcher(BatcherConfig(100.millis, cap), new ParquetBatchSink(outDir))
-    val q = batcher.start(ingest.toDS(), tmp("cap_ck"))
-    ingest.saveAllAsync((0 until 2500).map(i => LimitHash(s"u$i", i.toLong, null, s"h$i")))
-    q.processAllAvailable()
-    q.stop()
-    // every physical parquet file holds <= cap rows
-    val perFile = spark.read.parquet(s"$outDir/batch_id=*")
-      .select(input_file_name().as("f")).groupBy("f").count()
-      .agg(max("count")).head().getLong(0)
-    assert(perFile <= cap)
-    assert(ParquetBatchSink.readAll(spark, outDir).count() === 2500L)
+    val rows = perRowRows(2500)
+    // one 2,500-row block, then 2,500 one-row blocks that the micro-batch
+    // coalesces into multi-row splits the sink must still cut at cap
+    Seq[AsyncIngest[LimitHash] => Unit](_.saveAllAsync(rows), i => rows.foreach(i.saveAsync))
+      .foreach { enqueue =>
+        val outDir = tmp("cap_out")
+        val ingest = new AsyncIngest[LimitHash](spark.sqlContext)
+        enqueue(ingest)
+        val batcher = new MicroBatcher(BatcherConfig(100.millis, cap), new ParquetBatchSink(outDir))
+        val q = batcher.start(ingest.toDS(), tmp("cap_ck"))
+        q.processAllAvailable()
+        q.stop()
+        // every physical parquet file holds <= cap rows
+        val perFile = spark.read.parquet(s"$outDir/batch_id=*")
+          .select(input_file_name().as("f")).groupBy("f").count()
+          .agg(max("count")).head().getLong(0)
+        assert(perFile <= cap)
+        assert(ParquetBatchSink.readAll(spark, outDir).count() === 2500L)
+      }
   }
 
   test("tick-OR-size parity: one trigger drains an arbitrarily large burst in cap-bounded units") {
@@ -127,6 +152,48 @@ class BatcherSpec extends AnyFunSuite {
       .agg(max("count")).head().getLong(0)
     assert(perFile <= cap)
     assert(ParquetBatchSink.readAll(spark, outDir).count() === 5000L)
+  }
+
+  /** Runs `enqueue` before the query starts, so every row lands in
+    * batch 0; returns batch 0's task count and each written file's
+    * `amount`s. */
+  private def firstBatch(enqueue: AsyncIngest[LimitHash] => Unit): (Int, Seq[Seq[Long]]) = {
+    import spark.implicits._
+    val outDir = tmp("split_out")
+    val ingest = new AsyncIngest[LimitHash](spark.sqlContext)
+    enqueue(ingest)
+    val batcher = new MicroBatcher(BatcherConfig(50.millis, 10000), new ParquetBatchSink(outDir))
+    val jobs = new BatchJobs
+    spark.sparkContext.addSparkListener(jobs)
+    val q = batcher.start(ingest.toDS(), tmp("split_ck"))
+    q.processAllAvailable()
+    q.stop()
+    org.apache.spark.ListenerBusDrain(spark.sparkContext)
+    spark.sparkContext.removeSparkListener(jobs)
+    (jobs.tasksOf(q).getOrElse("0", 0), amountsPerFile(s"$outDir/batch_id=0"))
+  }
+
+  test("a per-row producer's micro-batch reads as at most one split per core, in enqueue order") {
+    val cores = spark.sparkContext.defaultParallelism
+    val (tasks, files) = firstBatch(i => perRowRows(200).foreach(i.saveAsync))
+    assert(tasks > 0 && tasks <= cores, s"tasks in batch 0: $tasks (cores $cores)")
+    assert(files.nonEmpty && files.size <= cores, s"files in batch 0: ${files.size}")
+    // each file is one contiguous ascending run of enqueue order, and the
+    // runs are the batch's blocks cut into equal neighbouring ranges
+    files.foreach { a =>
+      assert(a === (a.head until a.head + a.size), s"file rows out of enqueue order: $a")
+    }
+    assert(files.sortBy(_.head) ===
+      (0 until cores).map(g => (g * 200L / cores) until ((g + 1) * 200L / cores)))
+  }
+
+  test("a micro-batch with no more blocks than cores reads one split per block") {
+    val (tasks, files) = firstBatch { i =>
+      i.saveAllAsync(perRowRows(5000))
+      i.saveAllAsync(perRowRows(5000))
+    }
+    assert(tasks === 2)
+    assert(files.map(_.size).sorted === Seq(5000, 5000))
   }
 
   test("golden rows: full-field retrievability, count == 1 each (hashes_test.go:191-203)") {
